@@ -14,6 +14,36 @@ the batch plans exactly — the reference validated its variants the same way
 Event-time + watermarks are the semantics upgrade the reference lacks
 (SURVEY.md W3: sources emit event timestamps but no watermark is ever
 generated); streaming_tumbling_hourly uses them properly.
+
+The epoch contract. Every materialize job is ONE foreachBatch writer
+(`epoch_writer`, drained by `drain`) and keeps Structured Streaming's
+idempotent-epoch discipline:
+
+- stream: `_file_stream` replays a parquet directory under a schema peeked
+  from the footers, `maxFilesPerTrigger` setting the micro-batch size.
+- transform: a deterministic function of the micro-batch alone. The
+  artifacts it probes (indexes, codebooks, LMs, dimensions) are FROZEN for
+  the run, so their frames are planned once when the writer is built, never
+  re-listed per micro-batch.
+- upsert: `epoch_sink` tags the transformed rows with the micro-batch's
+  `batch_id` and rewrites ONLY that batch_id partition (dynamic partition
+  overwrite); every other epoch's rows stay untouched.
+- checkpoint: with a checkpointLocation, a restart resumes from the last
+  committed offsets and re-runs the in-flight micro-batch under the SAME
+  batch_id.
+- replay: the re-run epoch overwrites its own partition with identical rows,
+  so the stored table is exactly-once with no dedup state. Summing or
+  unioning any window of epochs reproduces the batch relation.
+
+Jobs that fold each micro-batch into a keyed table use the same writer with
+`_partition_merge_sink`. Their folds (replace-merge daily stats, HLL union,
+union-distinct chunk digests) are idempotent, so a replayed epoch refolds to
+the same partitions. The count-min rollup alone merges by counter ADDITION,
+which is not idempotent: a replayed epoch would double every touched
+counter, so it records applied-epoch markers and needs a checkpoint (markers
+key on batch_id, which only a checkpoint keeps monotone across restarts).
+The weighted top-k index writes generation g{batch_id} from g{batch_id-1};
+a replay re-derives the same generation.
 """
 
 from __future__ import annotations
@@ -22,38 +52,42 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..queries.rides import RIDES_EXPRS
 from ..functions.distance import distance_km
 from ..functions.exact import dec_sum
 
-def _events_stream(
-    spark: SparkSession, events_dir: str, glob: str | None = None, **options
+
+def _file_stream(
+    spark: SparkSession, path: str, glob: str | None = "*.parquet", **options
 ) -> DataFrame:
-    """Streaming reader over an events parquet directory with the ts column
-    normalized to TimestampType.
+    """Streaming reader over the parquet files of `path` matching `glob`
+    (None: every file), with reader options like maxFilesPerTrigger
+    (None-valued options are dropped).
 
     readStream needs an explicit schema; rather than hardcoding one, peek the
     actual footer schema with a batch read (driver data generations have
-    stored ts as both TIMESTAMP(NANOS)->BIGINT and TIMESTAMP(MICROS)->NTZ; a
-    hardcoded LongType schema silently reads micros as longs and shifts every
-    timestamp 1000x). Footer-only read: cheap at any scale."""
-    from ..tables import _pin_session_confs, normalize_event_ts
+    stored events.ts as both TIMESTAMP(NANOS)->BIGINT and
+    TIMESTAMP(MICROS)->NTZ; a hardcoded LongType schema silently reads micros
+    as longs and shifts every timestamp 1000x). Footer-only read: cheap at
+    any scale. The session confs the read depends on are pinned first."""
+    from ..tables import _pin_session_confs
 
     _pin_session_confs(spark)
-    peek = spark.read
-    if glob is not None:
-        peek = peek.option("pathGlobFilter", glob)
-    schema = peek.parquet(events_dir).schema
+    glob_opt = {} if glob is None else {"pathGlobFilter": glob}
+    schema = spark.read.options(**glob_opt).parquet(path).schema
+    opts = {k: v for k, v in options.items() if v is not None}
+    return spark.readStream.schema(schema).options(**glob_opt, **opts).parquet(path)
 
-    reader = spark.readStream.schema(schema)
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    for k, v in options.items():
-        if v is not None:
-            reader = reader.option(k, v)
-    return normalize_event_ts(reader.parquet(events_dir))
+
+def _events_stream(
+    spark: SparkSession, events_dir: str, glob: str | None = None, **options
+) -> DataFrame:
+    """Events file stream with the ts column normalized to TimestampType
+    from whatever dtype the footers declare (tables.normalize_event_ts)."""
+    from ..tables import normalize_event_ts
+
+    return normalize_event_ts(_file_stream(spark, events_dir, glob, **options))
 
 
 def stream_events(
@@ -104,22 +138,16 @@ def streaming_ride_avg(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
 
 
 def streaming_tpch_q1(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
-    """Q8 streaming form over a lineitem file stream. Same footer-peek +
-    declared-schema normalization as _events_stream, so a physical-type
-    drift in a data regeneration cannot silently corrupt the stream."""
+    """Q8 streaming form over a lineitem file stream. Same footer-peek
+    reader as the events stream plus the declared-schema normalization, so
+    a physical-type drift in a data regeneration cannot silently corrupt
+    the stream. Reader options like maxFilesPerTrigger are honored."""
     from ..queries.tpch import _q1_aggs
     from ..tables import _normalize_to_declared
 
-    peek = (
-        spark.read.option("pathGlobFilter", "lineitem.parquet").parquet(sf_dir).schema
+    li = _normalize_to_declared(
+        _file_stream(spark, sf_dir, "lineitem.parquet", **kw), "lineitem"
     )
-    reader = spark.readStream.schema(peek).option("pathGlobFilter", "lineitem.parquet")
-    # honor reader options like maxFilesPerTrigger, same contract as
-    # _events_stream (previously **kw was silently dropped)
-    for k, v in kw.items():
-        if v is not None:
-            reader = reader.option(k, v)
-    li = _normalize_to_declared(reader.parquet(sf_dir), "lineitem")
     return li.groupBy("l_returnflag", "l_linestatus").agg(*_q1_aggs())
 
 
@@ -138,7 +166,50 @@ def streaming_tumbling_hourly(spark: SparkSession, sf_dir: str, watermark: str =
     )
 
 
-# --- execution helper ---------------------------------------------------------
+# --- execution helpers --------------------------------------------------------
+
+
+def drain(writer) -> None:
+    """Start an unstarted streaming writer, run it until its source is
+    drained, and stop it (also when the run fails)."""
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def _sink_writer(
+    stream: DataFrame, sink, checkpoint: str | None = None, output_mode: str = "append"
+):
+    """The unstarted foreachBatch writer calling `sink(batch_df, batch_id)`
+    on each micro-batch of `stream`, checkpointed when `checkpoint` is given."""
+    writer = stream.writeStream.outputMode(output_mode).foreachBatch(sink)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return writer
+
+
+def epoch_sink(transform, out_path: str):
+    """The shared foreachBatch body of the epoch contract (module
+    docstring): land `transform(batch_df)` tagged with the batch_id as that
+    batch_id's partition of `out_path`, REPLACING it when the epoch is
+    replayed (an append sink would duplicate it)."""
+    from ..operators.storage import upsert_partitions
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        out = transform(batch_df).withColumn("batch_id", F.lit(int(batch_id)))
+        upsert_partitions(out, out_path, ["batch_id"])
+
+    return sink
+
+
+def epoch_writer(
+    stream: DataFrame, transform, out_path: str, checkpoint: str | None = None
+):
+    """The unstarted writer landing each micro-batch of `stream` through
+    epoch_sink(transform, out_path)."""
+    return _sink_writer(stream, epoch_sink(transform, out_path), checkpoint)
 
 
 def run_to_memory(
@@ -155,11 +226,7 @@ def run_to_memory(
     writer = agg_df.writeStream.outputMode(output_mode).format("memory").queryName(name)
     if trigger_ms is not None:
         writer = writer.trigger(processingTime=f"{trigger_ms} milliseconds")
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(writer)
     return agg_df.sparkSession.sql(f"SELECT * FROM {name}")
 
 
@@ -278,17 +345,12 @@ def streaming_ride_count_updates(
     def capture(batch_df: DataFrame, batch_id: int) -> None:
         emissions.append((batch_id, batch_df.collect()))
 
-    q = (
+    drain(
         agg.writeStream.outputMode("update")
         .foreachBatch(capture)
         .trigger(processingTime=f"{trigger_ms} milliseconds")
         .queryName(name)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     rows = [
         (batch_id, r["driver_id"], r["ride_cnt"])
         for batch_id, batch_rows in emissions
@@ -375,10 +437,11 @@ def streaming_daily_stats_materialize(
     so steady-state cost per batch is O(changed days), not O(table) — the
     100 TB property. This is the durable-serving-table face of the
     reference's retract stream (SURVEY.md T4): same deltas, upserted into
-    storage instead of printed."""
-    ev = _events_stream(spark, events_dir, **kw)
+    storage instead of printed. With a checkpoint, a replayed batch
+    rewrites the same partitions identically (effectively-once restart)."""
     agg = (
-        ev.groupBy(F.col("ts").cast("date").alias("day"), "event_type")
+        _events_stream(spark, events_dir, **kw)
+        .groupBy(F.col("ts").cast("date").alias("day"), "event_type")
         .agg(
             F.count("*").alias("n"),
             dec_sum("value").alias("sum_value"),
@@ -394,17 +457,7 @@ def streaming_daily_stats_materialize(
         return keep.unionByName(delta)
 
     merge = _partition_merge_sink(out_path, lambda b: b, combine)
-
-    writer = agg.writeStream.outputMode("update").foreachBatch(merge)
-    if checkpoint is not None:
-        # checkpoint + idempotent partition overwrite -> effectively-once on
-        # restart (a replayed batch rewrites the same partitions identically)
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(_sink_writer(agg, merge, checkpoint, output_mode="update"))
 
 
 def streaming_sketch_rollup_materialize(
@@ -427,7 +480,6 @@ def streaming_sketch_rollup_materialize(
     KB-sized sketches, never O(history) — and because there is no streaming
     aggregation state, nothing grows with the key space; the serving table
     IS the state."""
-    ev = _events_stream(spark, events_dir, **kw)
 
     def build_delta(batch_df: DataFrame) -> DataFrame:
         return batch_df.groupBy(
@@ -451,16 +503,8 @@ def streaming_sketch_rollup_materialize(
             )
         )
 
-    writer = ev.writeStream.outputMode("append").foreachBatch(
-        _partition_merge_sink(out_path, build_delta, combine)
-    )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    merge = _partition_merge_sink(out_path, build_delta, combine)
+    drain(_sink_writer(_events_stream(spark, events_dir, **kw), merge, checkpoint))
 
 
 def streaming_cms_rollup_materialize(
@@ -496,8 +540,6 @@ def streaming_cms_rollup_materialize(
             "batch ids at 0 and stale markers would drop new batches)"
         )
 
-    ev = _events_stream(spark, events_dir, **kw)
-
     def build_delta(batch_df: DataFrame) -> DataFrame:
         return cms_build(
             batch_df.withColumn("day", F.col("ts").cast("date")),
@@ -524,34 +566,22 @@ def streaming_cms_rollup_materialize(
             )
         )
 
-    writer = ev.writeStream.outputMode("append").foreachBatch(
-        _partition_merge_sink(out_path, build_delta, combine, applied_markers=True)
-    )
-    writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-
-def _documents_stream(spark: SparkSession, docs_dir: str, **options) -> DataFrame:
-    """Streaming reader over a documents parquet directory (footer-peek
-    schema, same contract as _events_stream)."""
-    schema = (
-        spark.read.option("pathGlobFilter", "*.parquet").parquet(docs_dir).schema
-    )
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", "*.parquet")
-    for k, v in options.items():
-        if v is not None:
-            reader = reader.option(k, v)
-    return reader.parquet(docs_dir)
+    merge = _partition_merge_sink(out_path, build_delta, combine, applied_markers=True)
+    drain(_sink_writer(_events_stream(spark, events_dir, **kw), merge, checkpoint))
 
 
 def streaming_chunk_index_materialize(
     spark: SparkSession, docs_dir: str, out_path: str,
     checkpoint: str | None = None, **kw
 ) -> None:
+    """Drain chunk_index_writer."""
+    drain(chunk_index_writer(spark, docs_dir, out_path, checkpoint, **kw))
+
+
+def chunk_index_writer(
+    spark: SparkSession, docs_dir: str, out_path: str,
+    checkpoint: str | None = None, **kw
+):
     """Incrementally maintain the CDC chunk-digest index (q160's corpus
     side) from a document stream: each micro-batch chunks ITS documents
     (queries/text.py::cdc_chunks_df — batch-local, no streaming aggregation
@@ -564,24 +594,11 @@ def streaming_chunk_index_materialize(
     demands them). Steady-state cost per batch: O(batch digests) rows
     merged into O(touched shards) partitions, never O(index); the stored
     index is exactly the relation q160's novelty join probes, so ingestion
-    keeps it fresh without any batch rebuild."""
-    q = chunk_index_writer(spark, docs_dir, out_path, checkpoint, **kw).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    keeps it fresh without any batch rebuild.
 
-
-def chunk_index_writer(
-    spark: SparkSession, docs_dir: str, out_path: str,
-    checkpoint: str | None = None, **kw
-):
-    """The unstarted writer behind streaming_chunk_index_materialize —
-    exposed so the kill/recovery test can start, kill, and restart the
-    SAME pipeline from its checkpoint."""
+    Returned unstarted, so the kill/recovery test can start, kill, and
+    restart the SAME pipeline from its checkpoint."""
     from ..queries.text import cdc_chunks_df
-
-    docs = _documents_stream(spark, docs_dir, **kw)
 
     def build_delta(batch_df: DataFrame) -> DataFrame:
         return (
@@ -595,12 +612,8 @@ def chunk_index_writer(
         # union-distinct: idempotent under replay, associative across batches
         return existing.unionByName(delta).distinct()
 
-    writer = docs.writeStream.outputMode("append").foreachBatch(
-        _partition_merge_sink(out_path, build_delta, combine, part_col="shard")
-    )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
+    merge = _partition_merge_sink(out_path, build_delta, combine, part_col="shard")
+    return _sink_writer(_file_stream(spark, docs_dir, **kw), merge, checkpoint)
 
 
 # --- ingest accounting via Dataset.observe --------------------------------------
@@ -729,102 +742,45 @@ class ObservedIngest:
         }
 
 
-def _embeddings_stream(spark: SparkSession, emb_dir: str, **options) -> DataFrame:
-    """Streaming reader over an embeddings parquet directory (footer-peek
-    schema, the _documents_stream contract)."""
-    schema = (
-        spark.read.option("pathGlobFilter", "*.parquet").parquet(emb_dir).schema
+def _vectors(batch_df: DataFrame) -> DataFrame:
+    """(vec_id, v) with the embedding cast to double, as the PQ bodies take it."""
+    return batch_df.select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", "*.parquet")
-    for k, v in options.items():
-        if v is not None:
-            reader = reader.option(k, v)
-    return reader.parquet(emb_dir)
 
 
 def pq_codes_writer(
     spark: SparkSession, emb_dir: str, out_path: str,
     books: list[list[list[float]]], checkpoint: str | None = None, **kw
 ):
-    """The unstarted writer behind streaming_pq_codes_materialize (the
-    classifier_scores_writer convention)."""
-    from ..operators.storage import upsert_partitions
+    """Train-offline / encode-online for the PQ index: FROZEN codebooks
+    (queries/similarity.py::_pq_books — in production the persisted
+    artifact) applied to an embedding stream, each micro-batch encoded
+    scan-side via the SHARED pq_code_str_col body and landed as a
+    batch_id-partitioned idempotent epoch (the q184 discipline). This is how
+    a vector index ingests at 100 TB: the codebook is a broadcast literal,
+    per-batch cost is one scan of the batch, and no streaming state exists."""
     from ..queries.similarity import pq_code_str_col
 
-    emb = _embeddings_stream(spark, emb_dir, **kw)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        enc = batch_df.select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-        )
-        out = enc.select(
-            "vec_id", pq_code_str_col(books).alias("code_str")
-        ).withColumn("batch_id", F.lit(int(batch_id)))
-        upsert_partitions(out, out_path, ["batch_id"])
-
-    writer = emb.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
+    return epoch_writer(
+        _file_stream(spark, emb_dir, **kw),
+        lambda b: _vectors(b).select("vec_id", pq_code_str_col(books).alias("code_str")),
+        out_path, checkpoint,
+    )
 
 
 def streaming_pq_codes_materialize(
     spark: SparkSession, emb_dir: str, out_path: str,
     books: list[list[list[float]]], checkpoint: str | None = None, **kw
 ) -> None:
-    """Train-offline / encode-online for the PQ index: FROZEN codebooks
-    (queries/similarity.py::_pq_books — in production the persisted
-    artifact) applied to an embedding stream, each micro-batch encoded
-    scan-side via the SHARED pq_code_str_col body and landed as a
-    batch_id-partitioned layout via dynamic partition overwrite, so a
-    checkpoint-replayed batch REPLACES its own partition (the q184
-    idempotent-epoch discipline). This is how a vector index ingests at
-    100 TB: the codebook is a broadcast literal, per-batch cost is one
-    scan of the batch, and no streaming state exists."""
-    q = pq_codes_writer(spark, emb_dir, out_path, books, checkpoint, **kw).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    """Drain pq_codes_writer."""
+    drain(pq_codes_writer(spark, emb_dir, out_path, books, checkpoint, **kw))
 
 
 def adc_search_writer(
     spark: SparkSession, queries_dir: str, out_path: str, index_path: str,
     books: list[list[list[float]]], checkpoint: str | None = None, **kw
 ):
-    """The unstarted writer behind streaming_adc_search_materialize."""
-    from ..operators.storage import upsert_partitions
-    from ..queries.similarity import adc_topk, pq_decode_codes, pq_query_slices
-
-    qstream = _embeddings_stream(spark, queries_dir, **kw)
-    # the code index is FROZEN across the run (see the materialize
-    # docstring): plan its frame once at writer build instead of re-listing
-    # and re-inferring the parquet source on every micro-batch (r15,
-    # VERDICT r14 #8 — per-batch driver fixed cost, guide §4.5 applied to
-    # the foreachBatch closure)
-    x = pq_decode_codes(spark.read.parquet(index_path))
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        q = pq_query_slices(
-            batch_df.select(
-                "vec_id",
-                F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-            )
-        )
-        out = adc_topk(q, x, books).withColumn("batch_id", F.lit(int(batch_id)))
-        upsert_partitions(out, out_path, ["batch_id"])
-
-    writer = qstream.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def streaming_adc_search_materialize(
-    spark: SparkSession, queries_dir: str, out_path: str, index_path: str,
-    books: list[list[list[float]]], checkpoint: str | None = None, **kw
-) -> None:
     """Query-stream PQ serving: ADC top-k for each arriving query against a
     MATERIALIZED code index (q198's output — the persisted artifact; raw
     corpus vectors are never touched at serve time) with frozen codebooks,
@@ -834,13 +790,24 @@ def streaming_adc_search_materialize(
     This is the online half of the PQ serving pair (q198 ingests/encodes,
     this searches): the 100 TB topology where the index is 16x smaller than
     the vectors and the searcher is bandwidth-bound on codes."""
-    q = adc_search_writer(
+    from ..queries.similarity import adc_topk, pq_decode_codes, pq_query_slices
+
+    x = pq_decode_codes(spark.read.parquet(index_path))
+    return epoch_writer(
+        _file_stream(spark, queries_dir, **kw),
+        lambda b: adc_topk(pq_query_slices(_vectors(b)), x, books),
+        out_path, checkpoint,
+    )
+
+
+def streaming_adc_search_materialize(
+    spark: SparkSession, queries_dir: str, out_path: str, index_path: str,
+    books: list[list[list[float]]], checkpoint: str | None = None, **kw
+) -> None:
+    """Drain adc_search_writer."""
+    drain(adc_search_writer(
         spark, queries_dir, out_path, index_path, books, checkpoint, **kw
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ))
 
 
 def ivfpq_search_writer(
@@ -848,53 +815,6 @@ def ivfpq_search_writer(
     cents_path: str, books: list[list[list[float]]],
     checkpoint: str | None = None, **kw
 ):
-    """The unstarted writer behind streaming_ivfpq_search_materialize."""
-    from ..operators.storage import upsert_partitions
-    from ..queries.similarity import (
-        IVFPQ_NPROBE, PQ_M, PQ_SUB, _ivf_probe, adc_topk, pq_decode_codes,
-    )
-
-    qstream = _embeddings_stream(spark, queries_dir, **kw)
-    # cell centroids + code index are FROZEN across the run (see the
-    # materialize docstring): plan both frames once at writer build instead
-    # of re-listing/re-inferring two parquet sources per micro-batch (r15,
-    # VERDICT r14 #8)
-    cent = spark.read.parquet(cents_path)
-    x = pq_decode_codes(spark.read.parquet(index_path), extra_cols=("label",))
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        e = batch_df.select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-        ).withColumn(
-            "nrm",
-            F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x)),
-        )
-        probe = _ivf_probe(e, cent, IVFPQ_NPROBE)
-        qs = probe.select(
-            "q_id",
-            F.col("label").alias("plabel"),
-            *[
-                F.slice("qv", m * PQ_SUB + 1, PQ_SUB).alias(f"qv{m}")
-                for m in range(PQ_M)
-            ],
-        )
-        out = adc_topk(qs, x, books, list_key=("plabel", "label")).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
-        upsert_partitions(out, out_path, ["batch_id"])
-
-    writer = qstream.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def streaming_ivfpq_search_materialize(
-    spark: SparkSession, queries_dir: str, out_path: str, index_path: str,
-    cents_path: str, books: list[list[list[float]]],
-    checkpoint: str | None = None, **kw
-) -> None:
     """Query-stream IVF-PQ serving (q203; the q199 searcher upgraded to the
     composed index): each arriving query is routed to its nprobe nearest
     coarse cells against the PERSISTED cell-centroid table (part of the
@@ -907,51 +827,62 @@ def streaming_ivfpq_search_materialize(
     the scan (dynamic partition pruning) and per-query work is bounded by
     the probed lists' populations — q199's flat scan touched every code
     for every batch."""
-    q = ivfpq_search_writer(
+    from ..queries.similarity import (
+        IVFPQ_NPROBE, PQ_M, PQ_SUB, _ivf_probe, adc_topk, pq_decode_codes,
+    )
+
+    cent = spark.read.parquet(cents_path)
+    x = pq_decode_codes(spark.read.parquet(index_path), extra_cols=("label",))
+
+    def transform(batch_df: DataFrame) -> DataFrame:
+        e = _vectors(batch_df).withColumn(
+            "nrm",
+            F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x)),
+        )
+        qs = _ivf_probe(e, cent, IVFPQ_NPROBE).select(
+            "q_id",
+            F.col("label").alias("plabel"),
+            *[
+                F.slice("qv", m * PQ_SUB + 1, PQ_SUB).alias(f"qv{m}")
+                for m in range(PQ_M)
+            ],
+        )
+        return adc_topk(qs, x, books, list_key=("plabel", "label"))
+
+    return epoch_writer(
+        _file_stream(spark, queries_dir, **kw), transform, out_path, checkpoint
+    )
+
+
+def streaming_ivfpq_search_materialize(
+    spark: SparkSession, queries_dir: str, out_path: str, index_path: str,
+    cents_path: str, books: list[list[list[float]]],
+    checkpoint: str | None = None, **kw
+) -> None:
+    """Drain ivfpq_search_writer."""
+    drain(ivfpq_search_writer(
         spark, queries_dir, out_path, index_path, cents_path, books,
         checkpoint, **kw
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ))
+
+
+def _long_docs(batch_df: DataFrame, *cols: str) -> DataFrame:
+    """`cols` + the tokenized words `w` and their count `n` of the docs with
+    at least SUBSTR_L tokens (the substring-gram bodies' input)."""
+    from ..queries.dedup import SUBSTR_L
+    from ..queries.text import words_col
+
+    return (
+        batch_df.select(*cols, words_col().alias("w"))
+        .withColumn("n", F.size("w").cast("bigint"))
+        .filter(F.col("n") >= SUBSTR_L)
+    )
 
 
 def substring_dedup_writer(
     spark: SparkSession, docs_dir: str, out_path: str, index_path: str,
     checkpoint: str | None = None, **kw
 ):
-    """The unstarted writer behind streaming_substring_dedup_materialize."""
-    from ..operators.storage import upsert_partitions
-    from ..queries.dedup import SUBSTR_L, substring_spans_vs_index
-    from ..queries.text import words_col
-
-    stream = _documents_stream(spark, docs_dir, **kw)
-    # frozen digest index (see the materialize docstring): planned once at
-    # writer build, not re-listed per micro-batch (r15, VERDICT r14 #8)
-    index = spark.read.parquet(index_path)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch = (
-            batch_df.select("doc_id", words_col().alias("w"))
-            .withColumn("n", F.size("w").cast("bigint"))
-            .filter(F.col("n") >= SUBSTR_L)
-        )
-        out = substring_spans_vs_index(batch, index).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
-        upsert_partitions(out, out_path, ["batch_id"])
-
-    writer = stream.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def streaming_substring_dedup_materialize(
-    spark: SparkSession, docs_dir: str, out_path: str, index_path: str,
-    checkpoint: str | None = None, **kw
-) -> None:
     """Rolling-ingest any-length substring dedup (q205; q202's batch job as
     the per-micro-batch stream): each arriving document batch is tokenized,
     its sliding {16}-token gram digests probed against the PERSISTED
@@ -962,46 +893,30 @@ def streaming_substring_dedup_materialize(
     so any micro-batching of the ingest drains to the same span set — the
     property that lets a checkpoint-replayed batch REPLACE its partition
     without changing any other doc's spans."""
-    q = substring_dedup_writer(
+    from ..queries.dedup import substring_spans_vs_index
+
+    index = spark.read.parquet(index_path)
+    return epoch_writer(
+        _file_stream(spark, docs_dir, **kw),
+        lambda b: substring_spans_vs_index(_long_docs(b, "doc_id"), index),
+        out_path, checkpoint,
+    )
+
+
+def streaming_substring_dedup_materialize(
+    spark: SparkSession, docs_dir: str, out_path: str, index_path: str,
+    checkpoint: str | None = None, **kw
+) -> None:
+    """Drain substring_dedup_writer."""
+    drain(substring_dedup_writer(
         spark, docs_dir, out_path, index_path, checkpoint, **kw
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ))
 
 
 def split_assign_writer(
     spark: SparkSession, docs_dir: str, out_path: str, sig_path: str,
     cc_path: str, checkpoint: str | None = None, **kw
 ):
-    """The unstarted writer behind streaming_split_assign_materialize."""
-    from ..operators.storage import upsert_partitions
-    from ..queries.dedup import simhash_rows, split_assign_vs_index
-
-    stream = _documents_stream(spark, docs_dir, **kw)
-    # frozen signature index + cluster map (see the materialize docstring):
-    # planned once at writer build, not re-listed per micro-batch (r15)
-    corpus_sig = spark.read.parquet(sig_path)
-    cluster_map = spark.read.parquet(cc_path)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_sig = simhash_rows(batch_df)
-        out = split_assign_vs_index(
-            batch_df.select("doc_id"), batch_sig, corpus_sig, cluster_map
-        ).withColumn("batch_id", F.lit(int(batch_id)))
-        upsert_partitions(out, out_path, ["batch_id"])
-
-    writer = stream.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def streaming_split_assign_materialize(
-    spark: SparkSession, docs_dir: str, out_path: str, sig_path: str,
-    cc_path: str, checkpoint: str | None = None, **kw
-) -> None:
     """Rolling-ingest leakage-safe split assignment (q213; q212's batch job
     as the per-micro-batch stream): each arriving document batch is
     simhash-signed with the SHARED simhash_rows body, probed against the
@@ -1013,42 +928,54 @@ def streaming_split_assign_materialize(
     so any micro-batching of the ingest drains to the same assignment —
     a checkpoint-replayed batch REPLACES its partition without moving any
     other doc's split."""
-    q = split_assign_writer(
+    from ..queries.dedup import simhash_rows, split_assign_vs_index
+
+    corpus_sig = spark.read.parquet(sig_path)
+    cluster_map = spark.read.parquet(cc_path)
+    return epoch_writer(
+        _file_stream(spark, docs_dir, **kw),
+        lambda b: split_assign_vs_index(
+            b.select("doc_id"), simhash_rows(b), corpus_sig, cluster_map
+        ),
+        out_path, checkpoint,
+    )
+
+
+def streaming_split_assign_materialize(
+    spark: SparkSession, docs_dir: str, out_path: str, sig_path: str,
+    cc_path: str, checkpoint: str | None = None, **kw
+) -> None:
+    """Drain split_assign_writer."""
+    drain(split_assign_writer(
         spark, docs_dir, out_path, sig_path, cc_path, checkpoint, **kw
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ))
 
 
 def novelty_counters_writer(
     spark: SparkSession, docs_dir: str, out_path: str, index_path: str,
     checkpoint: str | None = None, **kw
 ):
-    """The unstarted writer behind streaming_novelty_counters_materialize."""
-    from ..operators.storage import upsert_partitions
-    from ..queries.dedup import SUBSTR_L, _substr_grams
-    from ..queries.text import words_col
+    """Rolling-ingest dedup observability (q219; q217's dashboard emitted by
+    the real stream): each arriving micro-batch probes the PERSISTED corpus
+    digest index and lands PARTIAL per-source counters (docs, grams, index
+    hits) as batch_id-partitioned idempotent epochs. Because the index is
+    frozen across the run, the counters are MERGEABLE — summing the epochs
+    per source reproduces the whole-batch q217 relation exactly, which is
+    what lets a dashboard aggregate at read time over any window of epochs
+    without reprocessing a single document."""
+    from ..queries.dedup import _substr_grams
 
-    stream = _documents_stream(spark, docs_dir, **kw)
-    # frozen digest index (see the materialize docstring): planned once at
-    # writer build, not re-listed per micro-batch (r15)
     index = spark.read.parquet(index_path)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        base = (
-            batch_df.select("doc_id", "source", words_col().alias("w"))
-            .withColumn("n", F.size("w").cast("bigint"))
-            .filter(F.col("n") >= SUBSTR_L)
-        )
-        bg = _substr_grams(base, "source").localCheckpoint(eager=False)
+    def transform(batch_df: DataFrame) -> DataFrame:
+        bg = _substr_grams(_long_docs(batch_df, "doc_id", "source"), "source")
+        bg = bg.localCheckpoint(eager=False)
         hits = (
             bg.join(index, "gd")
             .groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_dup_grams"))
         )
-        out = (
+        return (
             bg.groupBy("source")
             .agg(
                 F.count_distinct("doc_id").alias("n_docs"),
@@ -1063,63 +990,27 @@ def novelty_counters_writer(
                 .cast("bigint")
                 .alias("n_dup_grams"),
             )
-            .withColumn("batch_id", F.lit(int(batch_id)))
         )
-        upsert_partitions(out, out_path, ["batch_id"])
 
-    writer = stream.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
+    return epoch_writer(
+        _file_stream(spark, docs_dir, **kw), transform, out_path, checkpoint
+    )
 
 
 def streaming_novelty_counters_materialize(
     spark: SparkSession, docs_dir: str, out_path: str, index_path: str,
     checkpoint: str | None = None, **kw
 ) -> None:
-    """Rolling-ingest dedup observability (q219; q217's dashboard emitted by
-    the real stream): each arriving micro-batch probes the PERSISTED corpus
-    digest index and lands PARTIAL per-source counters (docs, grams, index
-    hits) as batch_id-partitioned idempotent epochs. Because the index is
-    frozen across the run, the counters are MERGEABLE — summing the epochs
-    per source reproduces the whole-batch q217 relation exactly, which is
-    what lets a dashboard aggregate at read time over any window of epochs
-    without reprocessing a single document."""
-    q = novelty_counters_writer(
+    """Drain novelty_counters_writer."""
+    drain(novelty_counters_writer(
         spark, docs_dir, out_path, index_path, checkpoint, **kw
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ))
 
 
 def phrase_postings_writer(
     spark: SparkSession, docs_dir: str, out_path: str,
     checkpoint: str | None = None, **kw
 ):
-    """The unstarted writer behind streaming_phrase_postings_materialize."""
-    from ..operators.storage import upsert_partitions
-    from ..queries.text import _phrase_postings
-
-    stream = _documents_stream(spark, docs_dir, **kw)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = _phrase_postings(batch_df).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
-        upsert_partitions(out, out_path, ["batch_id"])
-
-    writer = stream.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def streaming_phrase_postings_materialize(
-    spark: SparkSession, docs_dir: str, out_path: str,
-    checkpoint: str | None = None, **kw
-) -> None:
     """Rolling-ingest phrase-postings maintenance (q258; q256's merge side
     as the per-micro-batch stream): each arriving document batch is
     gram-exploded through the SHARED _phrase_workload_hits body and lands
@@ -1129,39 +1020,25 @@ def streaming_phrase_postings_materialize(
     the frozen corpus postings reproduces the full-rebuild relation
     (q250's) exactly, and a checkpoint-replayed batch REPLACES its
     partition without moving any other doc's postings."""
-    q = phrase_postings_writer(spark, docs_dir, out_path, checkpoint, **kw).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    from ..queries.text import _phrase_postings
+
+    return epoch_writer(
+        _file_stream(spark, docs_dir, **kw), _phrase_postings, out_path, checkpoint
+    )
+
+
+def streaming_phrase_postings_materialize(
+    spark: SparkSession, docs_dir: str, out_path: str,
+    checkpoint: str | None = None, **kw
+) -> None:
+    """Drain phrase_postings_writer."""
+    drain(phrase_postings_writer(spark, docs_dir, out_path, checkpoint, **kw))
 
 
 def media_caption_gate_writer(
     spark: SparkSession, docs_dir: str, out_path: str,
     checkpoint: str | None = None, **kw
 ):
-    """The unstarted writer behind streaming_media_caption_gate_materialize."""
-    from ..operators.storage import upsert_partitions
-    from ..queries.media import media_caption_gate_rows
-
-    stream = _documents_stream(spark, docs_dir, **kw)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = media_caption_gate_rows(batch_df).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
-        upsert_partitions(out, out_path, ["batch_id"])
-
-    writer = stream.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def streaming_media_caption_gate_materialize(
-    spark: SparkSession, docs_dir: str, out_path: str,
-    checkpoint: str | None = None, **kw
-) -> None:
     """Rolling-ingest image-caption gating (q262; q260's pair filter as the
     per-micro-batch stream): each arriving document batch builds its media
     payloads, pairs them with their captions, scores and gates each pair
@@ -1171,42 +1048,25 @@ def streaming_media_caption_gate_materialize(
     CLIP scorer), so any micro-batching drains to the same gated set — a
     checkpoint-replayed batch REPLACES its partition without moving any
     other pair's verdict."""
-    q = media_caption_gate_writer(spark, docs_dir, out_path, checkpoint, **kw).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    from ..queries.media import media_caption_gate_rows
+
+    return epoch_writer(
+        _file_stream(spark, docs_dir, **kw), media_caption_gate_rows, out_path, checkpoint
+    )
+
+
+def streaming_media_caption_gate_materialize(
+    spark: SparkSession, docs_dir: str, out_path: str,
+    checkpoint: str | None = None, **kw
+) -> None:
+    """Drain media_caption_gate_writer."""
+    drain(media_caption_gate_writer(spark, docs_dir, out_path, checkpoint, **kw))
 
 
 def bin_histogram_writer(
     spark: SparkSession, docs_dir: str, out_path: str,
     checkpoint: str | None = None, **kw
 ):
-    """The unstarted writer behind streaming_bin_histogram_materialize."""
-    from ..operators.storage import upsert_partitions
-    from ..queries.audit import psi_bin_counts
-
-    stream = _documents_stream(spark, docs_dir, **kw)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = (
-            psi_bin_counts(batch_df)
-            .groupBy("source", "bin")
-            .agg(F.count(F.lit(1)).alias("a_cnt"))
-            .withColumn("batch_id", F.lit(int(batch_id)))
-        )
-        upsert_partitions(out, out_path, ["batch_id"])
-
-    writer = stream.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def streaming_bin_histogram_materialize(
-    spark: SparkSession, docs_dir: str, out_path: str,
-    checkpoint: str | None = None, **kw
-) -> None:
     """Streaming drift-monitor ingestion (q232; q231's serving face): each
     arriving document micro-batch lands its PARTIAL per-(source, bin)
     histogram as a batch_id-partitioned idempotent epoch, binned by the
@@ -1215,21 +1075,40 @@ def streaming_bin_histogram_materialize(
     psi_from_bin_counts — no document is ever reprocessed, and a
     checkpoint-replayed epoch REPLACES its own partition (the q161/q219
     idempotent-epoch discipline)."""
-    q = bin_histogram_writer(spark, docs_dir, out_path, checkpoint, **kw).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    from ..queries.audit import psi_bin_counts
+
+    return epoch_writer(
+        _file_stream(spark, docs_dir, **kw),
+        lambda b: psi_bin_counts(b).groupBy("source", "bin").agg(
+            F.count(F.lit(1)).alias("a_cnt")
+        ),
+        out_path, checkpoint,
+    )
+
+
+def streaming_bin_histogram_materialize(
+    spark: SparkSession, docs_dir: str, out_path: str,
+    checkpoint: str | None = None, **kw
+) -> None:
+    """Drain bin_histogram_writer."""
+    drain(bin_histogram_writer(spark, docs_dir, out_path, checkpoint, **kw))
 
 
 def es_topk_writer(
     spark: SparkSession, docs_dir: str, state_dir: str, k: int,
     checkpoint: str | None = None, **kw
 ):
-    """The unstarted writer behind streaming_es_topk_materialize."""
+    """Incremental maintenance of the weighted top-k sample index (q235;
+    q233's serving face): each arriving micro-batch is keyed by the SHARED
+    es_keys law, merged with the previous epoch's k-row index, and the new
+    top-k written as GENERATION g{batch_id} — a replayed epoch re-derives
+    its generation from g{batch_id-1} and overwrites it with identical
+    content (the keys are per-doc deterministic and top-k is a mergeable
+    fold), so the maintenance is exactly-once by idempotent epoch write
+    without ever reading and overwriting the same path in one job. State is
+    k rows per generation — the index a 100 TB rolling ingest keeps beside
+    its dedup artifacts, at metadata size."""
     from ..queries.text import es_keys
-
-    stream = _documents_stream(spark, docs_dir, **kw)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         cur = es_keys(batch_df)
@@ -1243,32 +1122,15 @@ def es_topk_writer(
             .parquet(os.path.join(state_dir, f"g{int(batch_id)}"))
         )
 
-    writer = stream.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
+    return _sink_writer(_file_stream(spark, docs_dir, **kw), sink, checkpoint)
 
 
 def streaming_es_topk_materialize(
     spark: SparkSession, docs_dir: str, state_dir: str, k: int,
     checkpoint: str | None = None, **kw
 ) -> str:
-    """Incremental maintenance of the weighted top-k sample index (q235;
-    q233's serving face): each arriving micro-batch is keyed by the SHARED
-    es_keys law, merged with the previous epoch's k-row index, and the new
-    top-k written as GENERATION g{batch_id} — a replayed epoch re-derives
-    its generation from g{batch_id-1} and overwrites it with identical
-    content (the keys are per-doc deterministic and top-k is a mergeable
-    fold), so the maintenance is exactly-once by idempotent epoch write
-    without ever reading and overwriting the same path in one job. Returns
-    the final generation's path. State is k rows per generation — the index
-    a 100 TB rolling ingest keeps beside its dedup artifacts, at metadata
-    size."""
-    q = es_topk_writer(spark, docs_dir, state_dir, k, checkpoint, **kw).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    """Drain es_topk_writer; return the final generation's path."""
+    drain(es_topk_writer(spark, docs_dir, state_dir, k, checkpoint, **kw))
     gens = sorted(
         (int(n[1:]) for n in os.listdir(state_dir) if n.startswith("g")),
     )
@@ -1279,34 +1141,6 @@ def temporal_enrich_writer(
     spark: SparkSession, views_dir: str, out_path: str, dim_path: str,
     checkpoint: str | None = None, **kw
 ):
-    """The unstarted writer behind streaming_temporal_enrich_materialize."""
-    from ..operators.asof import as_of_join
-    from ..operators.storage import upsert_partitions
-
-    stream = _documents_stream(spark, views_dir, **kw)
-    # frozen SCD2 dimension (see the materialize docstring): planned once
-    # at writer build, not re-listed per micro-batch (r15)
-    dim = spark.read.parquet(dim_path)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = as_of_join(
-            batch_df.select("user_id", "ts", F.col("event_id").alias("view_id")),
-            dim, on=["user_id"], left_ts="ts", right_ts="effective_from",
-        ).select("view_id", "user_id", "ts", "version_n", "state_value").withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
-        upsert_partitions(out, out_path, ["batch_id"])
-
-    writer = stream.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def streaming_temporal_enrich_materialize(
-    spark: SparkSession, views_dir: str, out_path: str, dim_path: str,
-    checkpoint: str | None = None, **kw
-) -> None:
     """Streaming temporal table join (q239; Flink's `FOR SYSTEM_TIME AS OF`
     lookup as a Spark micro-batch job): each arriving view batch is as-of
     joined against the PERSISTED SCD2 dimension (q236's artifact written
@@ -1314,108 +1148,83 @@ def streaming_temporal_enrich_materialize(
     The lookup is stateless per event (the dimension is frozen across the
     run), so any micro-batching drains to the same enriched relation —
     batching-invariance is the gate."""
-    q = temporal_enrich_writer(
+    from ..operators.asof import as_of_join
+
+    dim = spark.read.parquet(dim_path)
+    return epoch_writer(
+        _file_stream(spark, views_dir, **kw),
+        lambda b: as_of_join(
+            b.select("user_id", "ts", F.col("event_id").alias("view_id")),
+            dim, on=["user_id"], left_ts="ts", right_ts="effective_from",
+        ).select("view_id", "user_id", "ts", "version_n", "state_value"),
+        out_path, checkpoint,
+    )
+
+
+def streaming_temporal_enrich_materialize(
+    spark: SparkSession, views_dir: str, out_path: str, dim_path: str,
+    checkpoint: str | None = None, **kw
+) -> None:
+    """Drain temporal_enrich_writer."""
+    drain(temporal_enrich_writer(
         spark, views_dir, out_path, dim_path, checkpoint, **kw
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ))
 
 
 def streaming_classifier_scores_materialize(
     spark: SparkSession, docs_dir: str, out_path: str, weights: list[int],
     checkpoint: str | None = None, **kw
 ) -> None:
-    """Train-offline / score-online: apply a TRAINED quality-classifier
-    weight vector (queries/text.py::perceptron_train) to a document stream,
-    materializing per-doc scores as the stream arrives — the serving face
-    of q178's batch gate. Each micro-batch builds its own hashed-bigram
-    features and scores them with the SHARED clf_score body (one row = one
-    doc, so features never span batches and no streaming aggregation state
-    exists); the scored rows land as a batch_id-partitioned layout via
-    dynamic partition overwrite, so a checkpoint-replayed batch REPLACES
-    its own partition instead of appending duplicates (exactly-once by
-    idempotent epoch write — the q161 discipline, epoch-keyed because score
-    rows, unlike union-distinct digests, are not self-deduplicating).
-
-    At 100 TB this is the standard model-scoring ingest: the model is a
-    65-int broadcast literal, per-batch cost is O(batch bigrams), and no
-    state store grows."""
-    q = classifier_scores_writer(
+    """Drain classifier_scores_writer."""
+    drain(classifier_scores_writer(
         spark, docs_dir, out_path, weights, checkpoint, **kw
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ))
 
 
 def classifier_scores_writer(
     spark: SparkSession, docs_dir: str, out_path: str, weights: list[int],
     checkpoint: str | None = None, **kw
 ):
-    """The unstarted writer behind streaming_classifier_scores_materialize —
-    exposed so the kill/recovery test can start, kill, and restart the SAME
-    pipeline from its checkpoint (the chunk_index_writer convention)."""
-    from ..operators.storage import upsert_partitions
+    """Train-offline / score-online: apply a TRAINED quality-classifier
+    weight vector (queries/text.py::perceptron_train) to a document stream,
+    materializing per-doc scores as the stream arrives — the serving face
+    of q178's batch gate. Each micro-batch builds its own hashed-bigram
+    features and scores them with the SHARED clf_score body (one row = one
+    doc, so features never span batches and no streaming aggregation state
+    exists); the scored rows land as batch_id-partitioned idempotent epochs
+    (the q161 discipline, epoch-keyed because score rows, unlike
+    union-distinct digests, are not self-deduplicating).
+
+    At 100 TB this is the standard model-scoring ingest: the model is a
+    65-int broadcast literal, per-batch cost is O(batch bigrams), and no
+    state store grows."""
     from ..queries.text import clf_features_and_labels, clf_score
 
-    docs = _documents_stream(spark, docs_dir, **kw)
+    return epoch_writer(
+        _file_stream(spark, docs_dir, **kw),
+        lambda b: clf_score(clf_features_and_labels(b.select("doc_id", "text")), weights),
+        out_path, checkpoint,
+    )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        scored = clf_score(
-            clf_features_and_labels(batch_df.select("doc_id", "text")), weights
-        ).withColumn("batch_id", F.lit(int(batch_id)))
-        upsert_partitions(scored, out_path, ["batch_id"])
 
-    writer = docs.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
+def _lm_scorer(spark: SparkSession, lm_dir: str):
+    """batch_df -> ccnet_score_vs_lm(batch_df, ...) against the FROZEN
+    reference-LM artifacts under `lm_dir`. The artifact's recorded corpus
+    size drives the broadcast gate, so an LM past CCNET_BCAST_MAX_DOCS
+    degrades to a shuffle join per batch instead of failing the micro-batch
+    (None for pre-meta artifacts: ungated plain join, AQE may still
+    broadcast from measured sizes)."""
+    from ..queries.text import ccnet_score_vs_lm, lm_artifact_n_docs
+
+    n_docs = lm_artifact_n_docs(spark, lm_dir)
+    lm = [spark.read.parquet(f"{lm_dir}/{t}") for t in ("vw", "v", "bc", "uc")]
+    return lambda batch_df: ccnet_score_vs_lm(batch_df, *lm, n_docs=n_docs)
 
 
 def ccnet_score_writer(
     spark: SparkSession, docs_dir: str, out_path: str, lm_dir: str,
     checkpoint: str | None = None, **kw
 ):
-    """The unstarted writer behind streaming_ccnet_score_materialize."""
-    from ..operators.storage import upsert_partitions
-    from ..queries.text import ccnet_score_vs_lm, lm_artifact_n_docs
-
-    stream = _documents_stream(spark, docs_dir, **kw)
-    # the LM is frozen across the run: read its recorded corpus size once,
-    # so the broadcast gate is the artifact's, not an assumption — an LM
-    # past CCNET_BCAST_MAX_DOCS degrades to a shuffle join per batch
-    # instead of failing the micro-batch (None for pre-meta artifacts:
-    # ungated plain join, AQE may still broadcast from measured sizes)
-    lm_n_docs = lm_artifact_n_docs(spark, lm_dir)
-    # the four LM artifact frames are FROZEN across the run (docstring
-    # above): plan them once at writer build instead of re-listing and
-    # re-inferring four parquet sources on every micro-batch (r15, VERDICT
-    # r14 #8 — this was the largest per-batch driver fixed cost of the
-    # serving probe)
-    vw = spark.read.parquet(f"{lm_dir}/vw")
-    v = spark.read.parquet(f"{lm_dir}/v")
-    bc = spark.read.parquet(f"{lm_dir}/bc")
-    uc = spark.read.parquet(f"{lm_dir}/uc")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = ccnet_score_vs_lm(
-            batch_df, vw, v, bc, uc, n_docs=lm_n_docs
-        ).withColumn("batch_id", F.lit(int(batch_id)))
-        upsert_partitions(out, out_path, ["batch_id"])
-
-    writer = stream.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def streaming_ccnet_score_materialize(
-    spark: SparkSession, docs_dir: str, out_path: str, lm_dir: str,
-    checkpoint: str | None = None, **kw
-) -> None:
     """Rolling-ingest CCNet LM scoring (the q241 batch scorer as the
     per-micro-batch stream): each arriving document batch is scored against
     the PERSISTED reference-LM artifacts (vocabulary, vocab sizes, bigram
@@ -1426,56 +1235,25 @@ def streaming_ccnet_score_materialize(
     is a per-document aggregate, so any micro-batching of the ingest
     drains to the same score set — a checkpoint-replayed batch REPLACES
     its partition without moving any other doc's score."""
-    q = ccnet_score_writer(
+    return epoch_writer(
+        _file_stream(spark, docs_dir, **kw), _lm_scorer(spark, lm_dir), out_path, checkpoint
+    )
+
+
+def streaming_ccnet_score_materialize(
+    spark: SparkSession, docs_dir: str, out_path: str, lm_dir: str,
+    checkpoint: str | None = None, **kw
+) -> None:
+    """Drain ccnet_score_writer."""
+    drain(ccnet_score_writer(
         spark, docs_dir, out_path, lm_dir, checkpoint, **kw
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ))
 
 
 def curriculum_stage_writer(
     spark: SparkSession, docs_dir: str, out_path: str, lm_dir: str,
     cuts_path: str, checkpoint: str | None = None, **kw
 ):
-    """The unstarted writer behind streaming_curriculum_stage_materialize."""
-    from ..operators.storage import upsert_partitions
-    from ..queries.text import (
-        ccnet_score_vs_lm,
-        curriculum_stage_vs_cuts,
-        lm_artifact_n_docs,
-    )
-
-    stream = _documents_stream(spark, docs_dir, **kw)
-    # frozen LM: artifact-recorded corpus size drives the broadcast gate
-    # (see ccnet_score_writer)
-    lm_n_docs = lm_artifact_n_docs(spark, lm_dir)
-    # frozen LM + cuts artifacts (docstring above): planned once at writer
-    # build, not re-listed per micro-batch (r15)
-    vw = spark.read.parquet(f"{lm_dir}/vw")
-    v = spark.read.parquet(f"{lm_dir}/v")
-    bc = spark.read.parquet(f"{lm_dir}/bc")
-    uc = spark.read.parquet(f"{lm_dir}/uc")
-    cuts = spark.read.parquet(cuts_path)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        scored = ccnet_score_vs_lm(batch_df, vw, v, bc, uc, n_docs=lm_n_docs)
-        out = curriculum_stage_vs_cuts(scored, cuts).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
-        upsert_partitions(out, out_path, ["batch_id"])
-
-    writer = stream.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def streaming_curriculum_stage_materialize(
-    spark: SparkSession, docs_dir: str, out_path: str, lm_dir: str,
-    cuts_path: str, checkpoint: str | None = None, **kw
-) -> None:
     """Rolling-ingest curriculum stage assignment (q249; q248's batch job
     as the per-micro-batch stream): each arriving document batch is scored
     against the PERSISTED corpus reference-LM artifacts through the SHARED
@@ -1486,46 +1264,31 @@ def streaming_curriculum_stage_materialize(
     any micro-batching drains to the same assignment — a
     checkpoint-replayed batch REPLACES its partition without moving any
     other doc's stage."""
-    q = curriculum_stage_writer(
+    from ..queries.text import curriculum_stage_vs_cuts
+
+    score = _lm_scorer(spark, lm_dir)
+    cuts = spark.read.parquet(cuts_path)
+    return epoch_writer(
+        _file_stream(spark, docs_dir, **kw),
+        lambda b: curriculum_stage_vs_cuts(score(b), cuts),
+        out_path, checkpoint,
+    )
+
+
+def streaming_curriculum_stage_materialize(
+    spark: SparkSession, docs_dir: str, out_path: str, lm_dir: str,
+    cuts_path: str, checkpoint: str | None = None, **kw
+) -> None:
+    """Drain curriculum_stage_writer."""
+    drain(curriculum_stage_writer(
         spark, docs_dir, out_path, lm_dir, cuts_path, checkpoint, **kw
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ))
 
 
 def boilerplate_strip_writer(
     spark: SparkSession, docs_dir: str, out_path: str, flagged_path: str,
     checkpoint: str | None = None, **kw
 ):
-    """The unstarted writer behind streaming_boilerplate_strip_materialize."""
-    from ..operators.storage import upsert_partitions
-    from ..queries.text import boilerplate_strip_vs_index
-
-    stream = _documents_stream(spark, docs_dir, **kw)
-    # frozen artifact: measure it once (parquet-metadata count) so the
-    # broadcast gate reflects the real index, degrading to a shuffle join
-    # past BOILER_BCAST_MAX_PREFIXES instead of failing the micro-batch
-    flagged = spark.read.parquet(flagged_path)
-    n_flagged = flagged.count()
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = boilerplate_strip_vs_index(
-            batch_df, flagged, n_flagged=n_flagged
-        ).withColumn("batch_id", F.lit(int(batch_id)))
-        upsert_partitions(out, out_path, ["batch_id"])
-
-    writer = stream.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def streaming_boilerplate_strip_materialize(
-    spark: SparkSession, docs_dir: str, out_path: str, flagged_path: str,
-    checkpoint: str | None = None, **kw
-) -> None:
     """Rolling-ingest boilerplate stripping (q255; q251's cleaning transform
     as the per-micro-batch stream): each arriving document batch is probed
     against the PERSISTED corpus-trained flagged-prefix table (parquet —
@@ -1535,10 +1298,25 @@ def streaming_boilerplate_strip_materialize(
     across the run and the strip is per-document, so any micro-batching
     drains to the same cleaned set — a checkpoint-replayed batch REPLACES
     its partition without touching any other doc."""
-    q = boilerplate_strip_writer(
+    from ..queries.text import boilerplate_strip_vs_index
+
+    # frozen artifact: measure it once (parquet-metadata count) so the
+    # broadcast gate reflects the real index, degrading to a shuffle join
+    # past BOILER_BCAST_MAX_PREFIXES instead of failing the micro-batch
+    flagged = spark.read.parquet(flagged_path)
+    n_flagged = flagged.count()
+    return epoch_writer(
+        _file_stream(spark, docs_dir, **kw),
+        lambda b: boilerplate_strip_vs_index(b, flagged, n_flagged=n_flagged),
+        out_path, checkpoint,
+    )
+
+
+def streaming_boilerplate_strip_materialize(
+    spark: SparkSession, docs_dir: str, out_path: str, flagged_path: str,
+    checkpoint: str | None = None, **kw
+) -> None:
+    """Drain boilerplate_strip_writer."""
+    drain(boilerplate_strip_writer(
         spark, docs_dir, out_path, flagged_path, checkpoint, **kw
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ))

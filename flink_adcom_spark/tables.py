@@ -163,9 +163,9 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     elif dt == "timestamp_ntz":
         # session tz is pinned to UTC, so NTZ -> TZ is value-preserving. NOT
         # redundant with _SAFE_DRIFT_CASTS: STREAMING readers
-        # (jobs._events_stream, sources/replay) call this helper without the
-        # declared-schema normalization pass, and a watermark on an NTZ
-        # column is an AnalysisException.
+        # (jobs._events_stream on jobs._file_stream, sources/replay) call
+        # this helper without the declared-schema normalization pass, and a
+        # watermark on an NTZ column is an AnalysisException.
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 

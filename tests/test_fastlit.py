@@ -49,6 +49,7 @@ def _cmp(spark, fast_col, slow_col):
     a, b = _flatten(row["a"]), _flatten(row["b"])
     assert len(a) == len(b), f"shape drift: {row['a']!r} != {row['b']!r}"
     for x, y in zip(a, b):
+        assert (x is None) == (y is None), f"null drift: {x!r} != {y!r}"
         # BIT-level equality (ADVICE r14): SQL `a = b` treats -0.0 == 0.0,
         # so a sign-of-zero drift between the F.expr and F.lit paths would
         # pass silently; struct.pack compares the raw 8/4-byte payloads

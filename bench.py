@@ -192,8 +192,13 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001
             # One broken query must not zero out the whole round's numbers
             # (round 3 lost every timing to a single schema-drift error):
-            # record the failure, keep benchmarking the rest.
+            # record the failure, keep benchmarking the rest. A failure at
+            # rep 2+ has already published rep-1 (and, for ARRAY_FAMILY,
+            # min-of-3) times: drop them, so no query is both timed and
+            # failed in one record.
             errors[name] = f"{type(e).__name__}: {e}"[:300]
+            cold.pop(name, None)
+            q_min3.pop(name, None)
 
     canary_post_s = _load_canary(spark)
     # the query loop's effective load is best estimated by the bracketing
@@ -361,7 +366,11 @@ def _sf1_tier(spark) -> dict:
     computes every column, no driver transfer). One cold run per query in
     a process whose sf1 memos are empty, so each number INCLUDES artifact
     derivation — at this scale executor work dominates the driver overhead
-    that makes sf0.1 a weak instrument for 100 TB claims. Gated on
+    that makes sf0.1 a weak instrument for 100 TB claims. Memos are shared
+    across the tier, so only the FIRST consumer of an artifact pays for
+    building it: q200's time excludes the PQ codebook training q196 paid
+    for, and a number is comparable across rounds only while the query
+    order is unchanged. Gated on
     SPARK_GRAFT_SF1=0 to opt out; failures degrade to an error key."""
     if os.environ.get("SPARK_GRAFT_SF1", "1") == "0":
         return {}

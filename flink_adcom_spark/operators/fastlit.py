@@ -1,4 +1,5 @@
-"""Constant-folding-friendly literal builders for matrix/array constants.
+"""Constant-folding-friendly literal builders for matrix/array constants
+and string-keyed maps.
 
 PySpark's ``F.lit`` on a Python list expands to ``F.array(*[F.lit(x) ...])``
 — ONE py4j round trip per element. A PQ codebook (16 x 8 doubles) costs
@@ -83,4 +84,24 @@ def int_matrix_lit(matrix) -> Column:
         "array("
         + ",".join("array(" + ",".join(str(v) for v in r) + ")" for r in rows)
         + ")"
+    )
+
+
+def _sql_str(s: str) -> str:
+    """Spark SQL string literal spelling of `s`: backslash and single quote
+    escaped (the parser's default escaping), so any printable ASCII key
+    round-trips unchanged."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def string_map_lit(entries: dict[str, str]) -> Column:
+    """map<string, V> literal via one F.expr parse: each key is a Python
+    string, each value a SQL expression. Values stay SQL so a caller can
+    keep engine-side arithmetic (e.g. ``ln(cnt / tot)``) inside Spark, where
+    constant folding evaluates it once. An empty map raises: it has no
+    value type to spell."""
+    if not entries:
+        raise ValueError("string_map_lit: empty map")
+    return F.expr(
+        "map(" + ",".join(f"{_sql_str(k)},{v}" for k, v in entries.items()) + ")"
     )

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.fastlit import int_array_lit, int_matrix_lit
+from ..operators.fastlit import int_array_lit, int_matrix_lit, string_map_lit
 from ..registry import query
 from ..tables import load_table, widen_scan
 
@@ -3527,12 +3527,16 @@ def q180_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Engine-parity design: piece log-probs are computed ENGINE-SIDE
 # (ln(cnt/total), the q77/q130 divide-before-ln discipline) and flow into
 # the DP as data; the DP itself only ADDS pairs of doubles and COMPARES
-# (score, n_pieces, seg) tuples — IEEE-exact and order-fixed, so Spark's
-# Arrow-batched per-word DP and DuckDB's unrolled-CTE DP are bit-identical.
+# (-score, n_pieces, seg) structs — IEEE-exact and order-fixed, so Spark's
+# per-word aggregate() fold and DuckDB's unrolled-CTE DP are bit-identical.
 # Pieces cap at ULM_PIECE_MAX chars, so the DP is a sliding window of depth
-# 4: the oracle needs only the previous 4 position CTEs, and the per-word
-# Python DP is O(len * 4). ASCII-contracted like q170 (codepoint-vs-grapheme
-# length semantics diverge between engines on combining marks).
+# 4: the oracle needs only the previous 4 position CTEs, and each fold step
+# takes the min over at most 4 candidates. The inventory is driver-held:
+# every single character plus ULM_TOP_MULTI multi-char pieces over the
+# ASCII-contracted vocabulary (like q170: codepoint-vs-grapheme length
+# semantics diverge between engines on combining marks), so it never
+# exceeds 94 + ULM_TOP_MULTI entries at any corpus scale and rides into
+# the fold as one literal map.
 ULM_PIECE_MAX = 4   # max piece length -> DP lookahead window
 ULM_TOP_MULTI = 48  # multi-char inventory size before pruning
 ULM_PRUNE_K = 40    # pieces pruned between rounds (lowest usage first);
@@ -3541,10 +3545,6 @@ ULM_PRUNE_K = 40    # pieces pruned between rounds (lowest usage first);
                     # a smaller K removes only never-used pieces and
                     # round 2 would be vacuously identical to round 1)
 ULM_WMAX = 16       # words longer than this are excluded (both engines)
-# docs threshold under which the vocabulary relation (Heaps-bounded — far
-# fewer rows than words) is safely broadcast into the post-DP joins; the
-# q190 LANGID_BCAST_MAX_DOCS size-gate discipline
-ULM_BCAST_MAX_DOCS = 500_000
 
 
 def _ulm_cand_sql(sc: str, j: int, L: int) -> str:
@@ -3663,87 +3663,47 @@ def _ulm_oracle() -> str:
     """
 
 
-_ULM_DP_SCHEMA = "word string, s double, n int, seg string"
-
-
-def _ulm_viterbi(matches: DataFrame) -> DataFrame:
-    """Arrow-batched per-word Viterbi over the (word, wlen, j, L, logp)
-    match relation: for each word group, best[j] = the lexicographic min of
-    (-(best[j-L].score + logp), pieces+1, seg) over matching pieces ending
-    at j. The Python body performs ONLY double adds and tuple compares on
-    engine-computed logp values — the same two operations the oracle's
-    unrolled CTEs perform, in the same order, so the DP is bit-identical
-    across engines. One word never leaves one Arrow batch; the stage is
-    vocabulary-bound (Heaps' law), not corpus-bound. (r14 note: a
-    hash-bucketed grouped-map variant — one pandas call per 256-word
-    bucket — MEASURED 2-4x slower end to end than the per-word grouped
-    map; Spark 4's grouped-map slicing beats a pandas-side groupby loop.
-    Left as is.)"""
-
-    def dp(pdf):
-        import pandas as pd
-
-        word = pdf["word"].iloc[0]
-        wlen = int(pdf["wlen"].iloc[0])
-        byj: dict[int, list[tuple[int, float]]] = {}
-        for j, L, logp in zip(pdf["j"], pdf["L"], pdf["logp"]):
-            byj.setdefault(int(j), []).append((int(L), float(logp)))
-        best: dict[int, tuple[float, int, str]] = {0: (0.0, 0, "")}
-        for j in range(1, wlen + 1):
-            cands = []
-            for L, logp in byj.get(j, []):
-                prev = best.get(j - L)
-                if prev is None:
-                    continue
-                piece = word[j - L : j]
-                seg = piece if prev[2] == "" else prev[2] + "|" + piece
-                cands.append((-(prev[0] + logp), prev[1] + 1, seg))
-            if cands:
-                s, n, seg = sorted(cands)[0]
-                best[j] = (-s, n, seg)
-        fs = best[wlen]
-        return pd.DataFrame(
-            [[word, fs[0], fs[1], fs[2]]], columns=["word", "s", "n", "seg"]
-        )
-
-    return matches.groupBy("word").applyInPandas(dp, _ULM_DP_SCHEMA)
-
-
-def _ulm_matches(vocab: DataFrame, scores: DataFrame) -> DataFrame:
-    """(word, wlen, j, L, logp): every inventory piece occurrence ending at
-    position j of each vocab word — the DP's entire input. Built scan-side
-    (position/length grid + substr) with the inventory BROADCAST; at 100 TB
-    the inventory is vocabulary-statistics-sized (ULM_TOP_MULTI + alphabet),
-    always broadcastable."""
-    grid = vocab.select(
-        "word", "wlen", F.explode(F.sequence(F.lit(1), F.col("wlen"))).alias("j")
-    )
-    cands = (
-        grid.select(
-            "word", "wlen", "j",
-            F.explode(
-                F.array(*[F.lit(l) for l in range(1, ULM_PIECE_MAX + 1)])
-            ).alias("L"),
-        )
-        .filter(F.col("L") <= F.col("j"))
-        .withColumn(
-            "piece", F.col("word").substr(F.col("j") - F.col("L") + 1, F.col("L"))
-        )
-    )
-    return cands.join(F.broadcast(scores), "piece").select(
-        "word", "wlen", "j", "L", "logp"
+def _ulm_cand(lp: str, L: int) -> str:
+    """The fold's candidate ending at position j via the length-L piece:
+    the (negated score, n_pieces, seg) struct, or NULL when the prefix
+    state best[j-L] is unreachable or the piece is not in the map `lp`."""
+    prev = f"get(best, j - {L})"
+    piece = f"substr(word, j - {L - 1}, {L})"
+    logp = f"{lp}[{piece}]"
+    return (
+        f"CASE WHEN {prev} IS NOT NULL AND {logp} IS NOT NULL THEN named_struct("
+        f"'s', -(-{prev}.s + {logp}), 'n', {prev}.n + 1, "
+        f"'seg', CASE WHEN {prev}.seg = '' THEN {piece} "
+        f"ELSE concat({prev}.seg, '|', {piece}) END) END"
     )
 
 
-def _ulm_scores(inv: DataFrame) -> DataFrame:
-    """(piece, logp) with logp = ln(cnt / total) over the CURRENT inventory
+def _ulm_fold(lp: str) -> Column:
+    """Viterbi segmentation of column `word` against the piece -> logp map
+    column `lp`, as one aggregate() fold over positions 1..length(word).
+    best[k] is the winning candidate struct over the first k characters,
+    so its `s` holds the NEGATED score and -(-prev.s + logp) is exactly the
+    Python DP's -(score + logp) (negation is exact); best[0] is
+    (-0.0, 0, ''). array_min skips NULL candidates and orders structs field
+    by field — the (-score, n_pieces, seg) tuple order of the Python DP and
+    of the oracle's list_sort. Returns the final (s, n, seg) struct, NULL
+    if the word has no segmentation."""
+    cands = ", ".join(_ulm_cand(lp, L) for L in range(1, ULM_PIECE_MAX + 1))
+    return F.expr(
+        "aggregate(sequence(1, length(word)), "
+        "array(named_struct('s', -0D, 'n', 0, 'seg', '')), "
+        f"(best, j) -> concat(best, array(array_min(array({cands})))), "
+        "best -> get(best, length(word)))"
+    )
+
+
+def _ulm_logp(inv: dict[str, int]) -> Column:
+    """The piece -> ln(cnt / total) literal map over the CURRENT inventory
     (renormalized per round, as unigram-LM pruning requires). Divide before
-    ln — the q77/q130 parity discipline."""
-    tot = inv.agg(F.sum("cnt").cast("bigint").alias("tot"))
-    return inv.crossJoin(F.broadcast(tot)).select(
-        "piece",
-        F.ln(F.col("cnt").cast("double") / F.col("tot").cast("double")).alias("logp"),
-    )
+    ln — the q77/q130 parity discipline — and both stay inside Spark's
+    Log, evaluated once by constant folding."""
+    tot = sum(inv.values())
+    return string_map_lit({p: f"ln({c}D / {tot}D)" for p, c in inv.items()})
 
 
 @query(
@@ -3762,11 +3722,13 @@ def q179_unigram_lm_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     final segmentation, and its log-prob score — the fertility ablation
     partner to q173's BPE numbers.
 
-    Scale shape: everything past the one wordcount shuffle is
-    vocabulary-bound (Heaps' law, the q168 trick): the substring histogram,
-    inventory top-K (TakeOrdered, no global window), both DP passes (Arrow
-    batches over vocab words, inventory broadcast), and the usage rollup.
-    The corpus-sized work is exactly one exchange."""
+    Scale shape: the corpus-sized work is exactly one exchange, the
+    wordcount into the vocabulary checkpoint (Heaps' law, the q168 trick).
+    The inventory (<= 94 + ULM_TOP_MULTI rows) and the usage rollup
+    (<= ULM_TOP_MULTI rows) are collected to the driver; pruning is decided
+    there and each round's log-probs return as one literal map. Both
+    Viterbi rounds are then a JVM aggregate() fold per vocabulary row in
+    one projection over the checkpoint: no join, no Python worker."""
     w = words_col()
     vocab = (
         _documents(spark, sf_dir)
@@ -3775,7 +3737,6 @@ def q179_unigram_lm_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length("word").between(1, ULM_WMAX))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
-        .withColumn("wlen", F.length("word").cast("int"))
         .localCheckpoint(eager=False)
     )
     subs = (
@@ -3785,68 +3746,54 @@ def q179_unigram_lm_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "word", "freq", "i",
-            F.explode(
-                F.array(*[F.lit(l) for l in range(1, ULM_PIECE_MAX + 1)])
-            ).alias("L"),
+            F.explode(int_array_lit(range(1, ULM_PIECE_MAX + 1))).alias("L"),
         )
         .filter(F.col("i") + F.col("L") - 1 <= F.length("word"))
         .select(F.col("word").substr(F.col("i"), F.col("L")).alias("piece"), "freq")
         .groupBy("piece")
         .agg(F.sum("freq").cast("bigint").alias("cnt"))
-        .localCheckpoint(eager=False)
     )
-    singles = subs.filter(F.length("piece") == 1)
-    multi1 = (
+    multi = (
         subs.filter(F.length("piece") >= 2)
         .orderBy(F.col("cnt").desc(), F.col("piece").asc())
         .limit(ULM_TOP_MULTI)
     )
-    inv1 = singles.unionByName(multi1)
-    r1 = _ulm_viterbi(_ulm_matches(vocab, _ulm_scores(inv1))).localCheckpoint(
-        eager=False
-    )
-    usage = (
-        r1.join(vocab.select("word", "freq"), "word")
-        .select("freq", F.explode(F.split("seg", "\\|")).alias("piece"))
+    inv1 = {
+        r["piece"]: r["cnt"]
+        for r in subs.filter(F.length("piece") == 1).unionByName(multi).collect()
+    }
+    lp1 = _ulm_logp(inv1)
+    usage = dict(
+        vocab.select("word", "freq", lp1.alias("lp1"))
+        .select(
+            "freq",
+            F.explode(F.split(_ulm_fold("lp1")["seg"], "\\|")).alias("piece"),
+        )
         .filter(F.length("piece") >= 2)
         .groupBy("piece")
-        .agg(F.sum("freq").cast("bigint").alias("usage"))
+        .agg(F.sum("freq").cast("bigint"))
+        .collect()
     )
-    pruned = (
-        multi1.select("piece")
-        # usage is bounded by the INVENTORY, not the corpus (multi-char
-        # pieces in any segmentation are a subset of multi1's
-        # ULM_TOP_MULTI={ULM_TOP_MULTI} rows), but it derives from the DP
-        # output so the planner cannot estimate it — without the hint this
-        # 48-row join planned as a SortMergeJoin (2 exchanges + 2 sorts),
-        # TWICE, since the pruned subtree feeds both inv2 consumers (r15;
-        # guide §3.1 "estimates are often badly wrong ... use an explicit
-        # broadcast")
-        .join(F.broadcast(usage), "piece", "left")
-        .withColumn("usage", F.coalesce("usage", F.lit(0)))
-        .orderBy(F.col("usage").asc(), F.col("piece").asc())
-        .limit(ULM_PRUNE_K)
-        .select("piece")
+    pruned = set(
+        sorted(
+            (p for p in inv1 if len(p) >= 2), key=lambda p: (usage.get(p, 0), p)
+        )[:ULM_PRUNE_K]
     )
-    inv2 = singles.unionByName(multi1.join(pruned, "piece", "left_anti"))
-    r2 = _ulm_viterbi(_ulm_matches(vocab, _ulm_scores(inv2)))
-    # r1's slim projection is vocabulary-sized; below the size gate it is
-    # broadcast (q190's LANGID_BCAST_MAX_DOCS discipline — the planner sees
-    # only an opaque DP output and picks SMJ), past it the shuffle join is
-    # the correct scale plan
-    r1_n = r1.select("word", F.col("n").alias("n_pieces_r1"))
-    if _doc_count(spark, sf_dir) <= ULM_BCAST_MAX_DOCS:
-        r1_n = F.broadcast(r1_n)
+    lp2 = _ulm_logp({p: c for p, c in inv1.items() if p not in pruned})
     return (
-        r2.join(r1_n, "word")
-        .join(vocab.select("word", "freq"), "word")
+        vocab.select("word", "freq", lp1.alias("lp1"), lp2.alias("lp2"))
+        .select(
+            "word", "freq",
+            _ulm_fold("lp1")["n"].cast("int").alias("n_pieces_r1"),
+            _ulm_fold("lp2").alias("r2"),
+        )
         .select(
             "word",
             "freq",
-            F.col("n_pieces_r1").cast("int").alias("n_pieces_r1"),
-            F.col("n").cast("int").alias("n_pieces"),
-            "seg",
-            F.round("s", 6).alias("score"),
+            "n_pieces_r1",
+            F.col("r2.n").cast("int").alias("n_pieces"),
+            F.col("r2.seg").alias("seg"),
+            F.round(-F.col("r2.s"), 6).alias("score"),
         )
     )
 

@@ -21,6 +21,7 @@ from flink_adcom_spark.operators.fastlit import (
     double_matrix_lit,
     int_array_lit,
     int_matrix_lit,
+    string_map_lit,
 )
 
 ADVERSARIAL_DOUBLES = [
@@ -101,3 +102,27 @@ def test_int_matrix_lit_matches_f_lit(spark):
         int_matrix_lit(mat),
         F.array(*[F.array(*[F.lit(int(v)) for v in r]) for r in mat]),
     )
+
+
+PRINTABLE_ASCII = [chr(c) for c in range(33, 127)]  # the 94 of [!-~]
+
+
+def test_string_map_lit_round_trips_printable_ascii(spark):
+    """Every printable ASCII key — the escaping hazards \\ and ' included,
+    alone and in runs — comes back unchanged, and the map's dtype equals
+    the per-element F.create_map path."""
+    keys = PRINTABLE_ASCII + ["\\'", "'\\", "\\\\", "''", "a\\nb", "!~|"]
+    want = {k: i for i, k in enumerate(keys)}
+    slow = F.create_map(*[x for k, i in want.items() for x in (F.lit(k), F.lit(i))])
+    df = spark.range(1).select(
+        string_map_lit({k: str(i) for k, i in want.items()}).alias("a"),
+        slow.alias("b"),
+    )
+    assert df.schema["a"].dataType == df.schema["b"].dataType
+    row = df.collect()[0]
+    assert row["a"] == want == row["b"]
+
+
+def test_string_map_lit_rejects_empty():
+    with pytest.raises(ValueError):
+        string_map_lit({})

@@ -357,15 +357,27 @@ def test_classifier_scoring_inlines_model_as_literal(spark, sf_dir):
     assert num_exchanges(df) == 1, plan[:2000]
 
 
-def test_unigram_matches_broadcast_inventory(spark, sf_dir):
-    """q179's piece-match join must BROADCAST the inventory (it is
-    vocabulary-statistics-sized at any corpus scale); a shuffled hash join
-    here would re-shuffle the word grid once per round."""
-    from flink_adcom_spark.plans.explain import formatted_plan
+def test_unigram_final_plan_is_one_projection_within_job_budget(spark, sf_dir):
+    """q179's inventory and usage rollup are bounded and driver-held, so
+    both Viterbi rounds are a JVM fold in one projection over the
+    vocabulary checkpoint: the final executed plan has no join, no
+    exchange and no Python node, and building plus collecting the query
+    runs at most 8 Spark jobs (counted through a job group)."""
     from flink_adcom_spark.queries.text import q179_unigram_lm_tokenizer
 
-    plan = formatted_plan(q179_unigram_lm_tokenizer(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan[:2000]
+    sc = spark.sparkContext
+    group = "test-q179-job-budget"
+    sc.setJobGroup(group, "q179 build + collect")
+    try:
+        df = q179_unigram_lm_tokenizer(spark, sf_dir)
+        assert df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for node in ("Join", "Exchange", "Python", "Pandas"):
+        assert node not in plan, plan[:2000]
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 8, jobs
 
 
 def test_q156b_recall_path_is_codegen_not_hof(spark, sf_dir):

@@ -10,6 +10,8 @@ Contracts:
      segmentation changes between rounds (the r8 vacuous-green lesson).
   4. On a planted corpus with strong compound structure, frequent
      multi-char pieces win over character soup (fertility < 1 piece/char).
+  5. The Spark Viterbi kernel (q179's aggregate() fold) equals the Python
+     DP row for row: on forced score ties and on generated [!-~] words.
 """
 from __future__ import annotations
 
@@ -24,6 +26,26 @@ from flink_adcom_spark.queries.text import (
     ULM_WMAX,
     q179_unigram_lm_tokenizer,
 )
+
+
+def viterbi(w: str, sc: dict[str, float]):
+    """Pure-Python Viterbi reference: best (score, n_pieces, seg) of `w`
+    under the piece -> logp map `sc`, ties broken by fewer pieces, then the
+    smaller seg string."""
+    best = {0: (0.0, 0, "")}
+    for j in range(1, len(w) + 1):
+        cands = []
+        for L in range(1, min(ULM_PIECE_MAX, j) + 1):
+            piece = w[j - L : j]
+            if piece not in sc or (j - L) not in best:
+                continue
+            prev = best[j - L]
+            seg = piece if prev[2] == "" else prev[2] + "|" + piece
+            cands.append((-(prev[0] + sc[piece]), prev[1] + 1, seg))
+        if cands:
+            s, n, seg = sorted(cands)[0]
+            best[j] = (-s, n, seg)
+    return best[len(w)]
 
 
 def _py_unigram_lm(word_freq: dict[str, int]):
@@ -47,22 +69,6 @@ def _py_unigram_lm(word_freq: dict[str, int]):
     def scores(inv: dict[str, int]) -> dict[str, float]:
         tot = sum(inv.values())
         return {p: math.log(c / tot) for p, c in inv.items()}
-
-    def viterbi(w: str, sc: dict[str, float]):
-        best = {0: (0.0, 0, "")}
-        for j in range(1, len(w) + 1):
-            cands = []
-            for L in range(1, min(ULM_PIECE_MAX, j) + 1):
-                piece = w[j - L : j]
-                if piece not in sc or (j - L) not in best:
-                    continue
-                prev = best[j - L]
-                seg = piece if prev[2] == "" else prev[2] + "|" + piece
-                cands.append((-(prev[0] + sc[piece]), prev[1] + 1, seg))
-            if cands:
-                s, n, seg = sorted(cands)[0]
-                best[j] = (-s, n, seg)
-        return best[len(w)]
 
     sc1 = scores({**singles, **multi1})
     r1 = {w: viterbi(w, sc1) for w in vocab}
@@ -214,5 +220,66 @@ def test_viterbi_dp_matches_brute_force_enumeration():
             assert seg == b_seg, (w, seg, b_seg)
             assert n2 == b_n
             assert abs(round(b_score, 6) - score) < 1e-9
+
+    run()
+
+
+# --- kernel: q179's aggregate() fold equals the Python DP row for row -----------
+def _fold_rows(spark, words, sc):
+    """{word: (score, n_pieces, seg)} from q179's fold over `words` against
+    the piece -> logp map `sc`, its doubles shipped as exact literals."""
+    from flink_adcom_spark.operators.fastlit import string_map_lit
+    from flink_adcom_spark.queries.text import _ulm_fold
+
+    lp = string_map_lit({p: repr(float(v)) + "D" for p, v in sc.items()})
+    df = spark.createDataFrame([(w,) for w in words], "word string")
+    rows = df.select("word", lp.alias("lp")).select("word", _ulm_fold("lp").alias("b"))
+    return {r.word: (-r.b.s, r.b.n, r.b.seg) for r in rows.collect()}
+
+
+def test_fold_breaks_exact_score_ties_by_pieces_then_seg(spark):
+    """Hand-built log-probs force exact score ties: 'ab' ties a|b and 'z~'
+    ties z|~ on score, and both win on fewer pieces (for 'z~' against the
+    smaller seg string); 'xyz' and 'x~z' tie on score AND pieces, so
+    the seg string decides by byte order ('y' < '|' < '~'); 'pqr' has two
+    paths whose sums are equal in real arithmetic but one ulp apart in
+    IEEE, so the fold must add in the Python DP's order."""
+    sc = {
+        "a": -1.0, "b": -1.0, "ab": -2.0,
+        "x": -1.0, "y": -4.0, "z": -1.0, "~": -4.0,
+        "xy": -1.0, "yz": -1.0, "x~": -1.0, "~z": -1.0, "z~": -5.0,
+        "p": -0.1, "q": -5.0, "r": -0.0, "qr": -0.2, "pq": -0.3,
+    }
+    words = ["a", "ab", "abab", "z~", "xyz", "x~z", "pqr"]
+    got = _fold_rows(spark, words, sc)
+    assert got == {w: viterbi(w, sc) for w in words}
+    assert got["ab"][2] == "ab" and got["abab"][2] == "ab|ab"
+    assert got["z~"][2] == "z~"
+    assert got["xyz"][2] == "xy|z" and got["x~z"][2] == "x|~z"
+    assert got["pqr"][2] == "pq|r"
+
+
+def test_fold_matches_python_viterbi_on_generated_vocab(spark):
+    """Hypothesis vocabularies of up to ULM_WMAX-char [!-~] words, biased
+    towards shared pieces and the literal-escaping hazards ' and \\,
+    scored against the reference pipeline's round-2 inventory."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    chars = st.one_of(
+        st.sampled_from("ab'\\|"), st.characters(min_codepoint=33, max_codepoint=126)
+    )
+    words = st.lists(
+        st.text(alphabet=chars, min_size=1, max_size=ULM_WMAX),
+        min_size=1,
+        max_size=12,
+        unique=True,
+    )
+
+    @settings(max_examples=30, deadline=None)
+    @given(words=words, freqs=st.lists(st.integers(1, 50), min_size=12, max_size=12))
+    def run(words, freqs):
+        _, sc = _py_unigram_lm(dict(zip(words, freqs)))
+        assert _fold_rows(spark, words, sc) == {w: viterbi(w, sc) for w in words}
 
     run()
